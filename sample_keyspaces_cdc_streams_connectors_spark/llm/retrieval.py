@@ -309,15 +309,6 @@ def bm25_score_table(
     q_terms = sorted({_hash60(w) for w in _py_words(query)})
     if not q_terms:
         raise ValueError("query has no tokens")
-    # r14: size-estimated planning policy for the INDEX directory —
-    # a tiny index plans in the non-adaptive child session (AQE's
-    # per-exchange barriers dominate at small inputs), a large or
-    # unstatable one keeps the adaptive parent (session.py)
-    from sample_keyspaces_cdc_streams_connectors_spark.session import (
-        planning_session_for_path,
-    )
-
-    spark = planning_session_for_path(spark, path)
     stats = _load_stats(spark, path)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     # layout-locked bucket count (r8): an index written with a
@@ -510,12 +501,6 @@ def bm25_topk_many(
             f"bm25_topk_many requires unique {id_col!r} values; "
             f"{dup[0][id_col]!r} appears {dup[0]['count']} times"
         )
-    # r14: same index-directory planning policy as bm25_score_table
-    from sample_keyspaces_cdc_streams_connectors_spark.session import (
-        planning_session_for_path,
-    )
-
-    spark = planning_session_for_path(spark, path)
     stats = _load_stats(spark, path)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     n_buckets = int(stats.get("n_buckets", n_buckets))

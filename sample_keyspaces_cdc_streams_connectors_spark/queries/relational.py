@@ -156,17 +156,6 @@ def scan_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     csv_tmp = os.path.join(tempfile.gettempdir(), f"engine_csv_src_{tag}")
     if not os.path.exists(os.path.join(csv_tmp, "_SUCCESS")):
         write_csv(ev, csv_tmp)
-    # r15: the r14 fixture-dir planning policy (non-adaptive child
-    # session for the tiny roundtrip fixtures) is REVERTED here — the
-    # driver measured it slower in BOTH r14 runs (0.93→1.28 s @32c,
-    # 1.21 s @8c) and this host's r15 interleaved A/B agreed (child
-    # min/median 0.801/1.022 s vs parent 0.767/0.964 s, parent faster
-    # 6/7 post-warmup cycles): with AQE the fixture-side groupBys
-    # coalesce to a handful of tasks, which beats the child session's
-    # conf-sync + fixed-partition plan at this size.  The caller's
-    # session (itself size-policied for the DATASET dir via
-    # load_table) is used for the fixture reads; bm25's index-dir
-    # policy is unaffected (the driver data never contradicted it).
     csv_back = load_csv(
         spark,
         csv_tmp,

@@ -54,138 +54,6 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     return spark
 
 
-#: below this estimated input-dataset size, adaptive query execution
-#: is a net LOSS: AQE materializes every Exchange as a separate query
-#: stage (a scheduling barrier + re-optimization round-trip), which
-#: costs 0.1-1s per exchange while its benefits (runtime join
-#: re-planning, partition coalescing, skew splitting) only pay off
-#: when shuffles are large.  Measured at sf0.1 (local[32]): the
-#: 40-query headline suite runs ~15% faster non-adaptively, with
-#: multi-exchange pipelines (ngram dedup 3.0->1.7s, embedding dedup
-#: 2.4->1.6s) the biggest winners.  Overridable via
-#: $SPARK_GRAFT_SMALL_PLAN_BYTES (0 disables the policy entirely).
-SMALL_PLAN_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_PLAN_BYTES", str(2 << 30))
-)
-
-#: parent-session id -> (weakref to parent, child session).  The
-#: weakref guards against CPython id() recycling: if the id's parent
-#: was collected and a NEW session landed at the same address, the
-#: cached child (bound to the dead parent's context) must not be
-#: returned.
-_SMALL_PLAN_SESSIONS: dict[int, tuple] = {}
-
-
-#: child-session id -> hashCode of the parent conf map last synced
-#: onto it (Scala immutable maps hash by content, so ONE py4j call
-#: detects drift; the full ~hundreds-of-round-trips copy only runs
-#: when the parent's conf actually changed)
-_SYNCED_CONF_HASH: dict[int, int] = {}
-
-
-def _sync_conf(parent: SparkSession, child: SparkSession) -> None:
-    """Copy the parent's runtime SQL conf onto the child (newSession
-    starts from the context's INITIAL conf, and the parent's conf may
-    drift after the child is created — re-sync keeps the only
-    divergence adaptivity).  Skips the copy when a content hash shows
-    nothing changed since the last sync."""
-    try:
-        jconfs = parent._jsparkSession.sessionState().conf().getAllConfs()
-        h = jconfs.hashCode()
-        if _SYNCED_CONF_HASH.get(id(child)) == h:
-            return
-        it = jconfs.iterator()
-        while it.hasNext():
-            e = it.next()
-            try:
-                child.conf.set(e._1(), e._2())
-            except Exception:
-                pass  # non-settable / static conf
-        _SYNCED_CONF_HASH[id(child)] = h
-    except Exception:
-        tune(child)  # fall back to the engine's standard conf set
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-
-
-def small_plan_session(spark: SparkSession) -> SparkSession:
-    """A child session (same SparkContext, shared cache manager and
-    catalog) whose SQL conf MIRRORS the parent's runtime conf but
-    disables adaptive execution — the planning context for
-    small-input queries (see :data:`SMALL_PLAN_MAX_BYTES`).
-
-    Memoized per parent session (weakref-validated against id
-    recycling); the conf re-syncs from the parent on EVERY call, so
-    later parent conf changes (shuffle partitions, timezone) reach
-    the child too.  DataFrames from the child execute under the
-    child's conf at action time; they can join other frames from the
-    SAME child (which is why the policy scopes per dataset directory,
-    not per table — see ``sources.tables``)."""
-    import weakref
-
-    key = id(spark)
-    entry = _SMALL_PLAN_SESSIONS.get(key)
-    child = None
-    if entry is not None:
-        parent_ref, cached = entry
-        if parent_ref() is spark:
-            child = cached
-    if child is None:
-        child = spark.newSession()
-        _SMALL_PLAN_SESSIONS[key] = (weakref.ref(spark), child)
-    _sync_conf(spark, child)
-    return child
-
-
-#: directory -> on-disk bytes (planning_session_for_path cache)
-_PATH_BYTES: dict[str, int | None] = {}
-
-
-def planning_session_for_path(spark: SparkSession, path: str) -> SparkSession:
-    """:func:`planning_session` keyed on a DERIVED-ARTIFACT directory
-    (an index tree, a format-roundtrip fixture dir) instead of the
-    dataset directory — r14 optimization: queries whose inputs are
-    such artifacts (bm25_rank, scan_format_roundtrip) were planning
-    adaptively even when the artifact is tiny, paying one AQE
-    stage-materialization barrier per Exchange (the same cost the
-    dataset-dir policy in ``sources.tables`` already avoids; guide
-    §1.2/#3 — config after algorithm, and session.SMALL_PLAN_MAX_BYTES
-    documents the measured ~15%).  Local directories are statted once
-    and cached; non-statable (object-store) paths keep the adaptive
-    parent — at 100 TB the artifact outgrows the threshold and the
-    policy returns the adaptive session again, so the posture stays
-    scale-adaptive, not local-tuned."""
-    p = path.rstrip("/")
-    if p not in _PATH_BYTES:
-        total: int | None = None
-        if os.path.isdir(p):
-            total = 0
-            for root, _dirs, files in os.walk(p):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-        _PATH_BYTES[p] = total
-    return planning_session(spark, _PATH_BYTES[p])
-
-
-def planning_session(
-    spark: SparkSession, est_input_bytes: int | None
-) -> SparkSession:
-    """Session to PLAN a query against an input of the given estimated
-    size: the non-adaptive child below :data:`SMALL_PLAN_MAX_BYTES`,
-    the (adaptive) parent above it or when the size is unknown —
-    unknown inputs are presumed large, so the 100 TB posture is the
-    default."""
-    if (
-        est_input_bytes is not None
-        and SMALL_PLAN_MAX_BYTES > 0
-        and est_input_bytes < SMALL_PLAN_MAX_BYTES
-    ):
-        return small_plan_session(spark)
-    return spark
-
-
 def get_spark(app_name: str = "keyspaces-cdc-spark") -> SparkSession:
     """Build (or reuse) a local session sized from $SPARK_GRAFT_CPUS."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")

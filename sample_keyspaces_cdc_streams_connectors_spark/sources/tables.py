@@ -29,9 +29,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: sf_dir -> total on-disk bytes (None = not statable, e.g. s3a://)
-_DIR_BYTES: dict[str, int | None] = {}
-
 #: parquet path -> schema (r14 optimization): ``spark.read.parquet``
 #: resolves the datasource EAGERLY — file listing + footer schema
 #: inference, measured ~60-90 ms of driver time PER CALL — and the
@@ -58,25 +55,6 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(sch).parquet(path)
 
 
-def _dataset_bytes(sf_dir: str) -> int | None:
-    """Total parquet footprint of the dataset directory — the size
-    estimate behind the small-input planning policy.  Only local
-    paths are statted (cheaply); object-store URIs return None and
-    keep the adaptive (at-scale) session."""
-    if sf_dir not in _DIR_BYTES:
-        total: int | None = None
-        if os.path.isdir(sf_dir):
-            total = 0
-            for root, _dirs, files in os.walk(sf_dir):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-        _DIR_BYTES[sf_dir] = total
-    return _DIR_BYTES[sf_dir]
-
-
 #: parquet path -> estimated scan-split count (metadata only, cached;
 #: None = unstatable).  See :func:`parquet_scan_splits`.
 _SCAN_SPLITS_CACHE: dict[str, int | None] = {}
@@ -86,6 +64,11 @@ _SCAN_SPLITS_CACHE: dict[str, int | None] = {}
 #: openCostInBytes when files are packed into splits.
 _MAX_SPLIT_BYTES = 128 * 1024 * 1024
 _OPEN_COST_BYTES = 4 * 1024 * 1024
+
+#: a directory with more data files than this is presumed large (the
+#: estimate is ``None``) without statting the rest: the walk is driver
+#: time, and the open cost alone puts that many files above 300 splits.
+_MAX_WALK_FILES = 10_000
 
 
 def parquet_scan_splits(path: str) -> int | None:
@@ -99,7 +82,8 @@ def parquet_scan_splits(path: str) -> int | None:
     - directory: ``ceil(sum(size_i + openCost) / maxPartitionBytes)``
       over the data files (Spark's split-packing arithmetic; no footer
       reads — at scale a table has thousands of files and the file
-      sizes alone decide);
+      sizes alone decide); past :data:`_MAX_WALK_FILES` files the walk
+      stops and the estimate is ``None``;
     - unstatable (object-store URI): ``None`` — presumed large and
       already parallel, the at-scale default.
 
@@ -116,11 +100,13 @@ def parquet_scan_splits(path: str) -> int | None:
                 size = os.path.getsize(path)
                 est = max(1, min(n_rg, -(-size // _MAX_SPLIT_BYTES)))
             elif os.path.isdir(path):
-                total = 0
+                total, n_files = 0, 0
                 for root, _dirs, files in os.walk(path):
-                    for f in files:
-                        if f.startswith(("_", ".")):
-                            continue
+                    data = [f for f in files if not f.startswith(("_", "."))]
+                    n_files += len(data)
+                    if n_files > _MAX_WALK_FILES:
+                        break
+                    for f in data:
                         try:
                             total += (
                                 os.path.getsize(os.path.join(root, f))
@@ -128,7 +114,8 @@ def parquet_scan_splits(path: str) -> int | None:
                             )
                         except OSError:
                             pass
-                est = max(1, -(-total // _MAX_SPLIT_BYTES))
+                else:
+                    est = max(1, -(-total // _MAX_SPLIT_BYTES))
         except Exception:
             est = None
         _SCAN_SPLITS_CACHE[path] = est
@@ -158,16 +145,6 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # Size-estimated planning policy: datasets under
-    # session.SMALL_PLAN_MAX_BYTES plan in the non-adaptive child
-    # session (AQE's per-exchange stage barriers dominate at small
-    # input sizes); larger or unstatable datasets keep the adaptive
-    # parent.  The decision keys on the DATASET directory, not the
-    # table, so every frame of one dataset shares a session and joins
-    # compose.
-    from sample_keyspaces_cdc_streams_connectors_spark.session import planning_session
-
-    spark = planning_session(spark, _dataset_bytes(sf_dir))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":

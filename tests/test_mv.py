@@ -4,6 +4,8 @@ delete binds the key from oldImage, latest sequence wins per key."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -11,6 +13,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from sample_keyspaces_cdc_streams_connectors_spark.operators import mv
 from sample_keyspaces_cdc_streams_connectors_spark.operators.mv import mv_apply
 
 IMG = StructType(
@@ -37,12 +40,12 @@ SCHEMA = StructType(
 )
 
 
-def _env(spark, events):
+def _env(spark, events, schema=SCHEMA):
     """events: (seq, op, new(k,v)|None, old(k,v)|None)"""
     rows = [
         ((op, f"{seq:06d}"), new, old) for seq, op, new, old in events
     ]
-    return spark.createDataFrame(rows, SCHEMA)
+    return spark.createDataFrame(rows, schema)
 
 
 def _state(spark, events):
@@ -160,3 +163,50 @@ def test_independent_keys(spark):
             (3, "DELETE", None, (1, "a")),
         ],
     ) == {2: "b"}
+
+
+def test_narrow_image_matches_pass_through(spark, monkeypatch):
+    """A 2-of-8-field request carries only those fields through the
+    max_by exchange (the narrowed ``__img`` struct) and yields the same
+    rows as the whole-image pass-through."""
+    img8 = StructType(
+        [StructField("k", IntegerType(), True)]
+        + [StructField(f"f{i}", StringType(), True) for i in range(1, 8)]
+    )
+    schema = StructType(
+        [
+            SCHEMA["metadata"],
+            StructField("newImage", img8, True),
+            StructField("oldImage", img8, True),
+        ]
+    )
+
+    def img(k, tag):
+        return (k, *[f"{tag}{i}" for i in range(1, 8)])
+
+    env = _env(
+        spark,
+        [
+            (1, "INSERT", img(1, "a"), None),
+            (2, "UPDATE", img(1, "b"), img(1, "a")),
+            (3, "INSERT", img(2, "c"), None),
+            (4, "DELETE", None, img(2, "c")),
+            (5, "INSERT", img(3, "d"), None),
+        ],
+        schema,
+    )
+
+    def run():
+        out = mv_apply(env, pk=["k"], fields=["f2", "f5"])
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return plan, sorted(tuple(r) for r in out.collect())
+
+    narrow_plan, narrow_rows = run()
+    monkeypatch.setattr(mv, "_NARROW_MIN_DROP", 1.01)
+    whole_plan, whole_rows = run()
+    narrowed_img = re.compile(
+        r"struct\(f2, newImage#\d+\.f2, f5, newImage#\d+\.f5\) AS __img#"
+    )
+    assert narrowed_img.search(narrow_plan)
+    assert not narrowed_img.search(whole_plan)
+    assert narrow_rows == whole_rows == [(1, "b2", "b5"), (3, "d2", "d5")]

@@ -328,7 +328,7 @@ def test_media_duration_profile_fused_map_only(spark, sf_dir):
     assert plan.count("Exchange") <= 1
 
 
-def test_spread_scan_gates_on_input_parallelism(spark, sf_dir, tmp_path):
+def test_spread_scan_gates_on_input_parallelism(spark, sf_dir, tmp_path, monkeypatch):
     """r15 (VERDICT r14 #5): the RoundRobin spreads that fan a
     single-row-group fixture across cores must SKIP the exchange when
     the scan is already parallel — at 100 TB an unconditional
@@ -337,7 +337,7 @@ def test_spread_scan_gates_on_input_parallelism(spark, sf_dir, tmp_path):
     >= nparts decent files -> pass-through (no Exchange)."""
     from pyspark.sql import functions as F
 
-    from sample_keyspaces_cdc_streams_connectors_spark.sources import spread_scan, table_path
+    from sample_keyspaces_cdc_streams_connectors_spark.sources import spread_scan, table_path, tables
     from sample_keyspaces_cdc_streams_connectors_spark.sources.tables import (
         _SCAN_SPLITS_CACHE,
         parquet_scan_splits,
@@ -374,3 +374,10 @@ def test_spread_scan_gates_on_input_parallelism(spark, sf_dir, tmp_path):
     # directory estimate: real multi-file dir uses file-size packing
     est = parquet_scan_splits(multi)
     assert est is not None and est >= 1
+
+    # the directory walk is capped: past the cap the input is presumed
+    # large without statting the rest
+    monkeypatch.setattr(tables, "_MAX_WALK_FILES", 3)
+    capped = str(tmp_path / "capped")
+    spark.range(100).repartition(4).write.parquet(capped)
+    assert parquet_scan_splits(capped) is None

@@ -31,6 +31,8 @@ def _rows(df):
 def test_csv_roundtrip_exact(spark, sf_dir, tmp_path):
     """bigint / µs-timestamp / double / quoted-json-text survive a
     CSV write→read cycle bit-exactly."""
+    # every frame plans in the caller's session, so frames join freely
+    assert load_table(spark, sf_dir, "events").sparkSession is spark
     ev = load_table(spark, sf_dir, "events").limit(200)
     path = str(tmp_path / "ev_csv")
     write_csv(ev, path)
@@ -83,29 +85,3 @@ def test_unknown_cql_type_falls_back_to_text(spark, tmp_path):
     row = got.collect()[0]
     assert (row.a, row.b) == (1, "xyz")
 
-
-def test_small_plan_policy(spark, sf_dir, monkeypatch):
-    """Datasets under SMALL_PLAN_MAX_BYTES plan in the memoized
-    non-adaptive child session (runtime conf cloned, AQE off); same-
-    dataset frames share one session so joins compose; disabling the
-    policy (threshold 0) returns the adaptive parent."""
-    from sample_keyspaces_cdc_streams_connectors_spark import session as S
-    from sample_keyspaces_cdc_streams_connectors_spark.sources import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    docs = load_table(spark, sf_dir, "documents")
-    child = ev.sparkSession
-    assert child is docs.sparkSession  # memoized per parent
-    assert child is not spark
-    assert child.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    # runtime conf cloned from the parent
-    assert child.conf.get("spark.sql.session.timeZone") == "UTC"
-    assert child.conf.get("spark.sql.shuffle.partitions") == spark.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    # same-dataset frames join (one session)
-    assert ev.limit(5).join(docs.limit(5), ev.user_id == docs.doc_id, "left").count() == 5
-
-    monkeypatch.setattr(S, "SMALL_PLAN_MAX_BYTES", 0)
-    assert load_table(spark, sf_dir, "events").sparkSession is spark

@@ -7,8 +7,7 @@ Usage: python tools/dump_plans.py <suffix> [query ...]
 The optimization-round judge cannot run Spark; these files are the
 evidence for every plan-shape claim in OPTIMIZATION_r15.md.  Plans are
 captured at sf0.001 (plan SHAPE is scale-invariant for these queries;
-only AQE's runtime re-planning differs, and the engine pins the
-non-adaptive child session for small inputs anyway — session.py).
+only AQE's runtime re-planning differs).
 """
 
 from __future__ import annotations
